@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from luxor_db_spark.catalog import load_table, table_path
+from luxor_db_spark.catalog import load_table, parquet_schema, table_path
 from luxor_db_spark.registry import query
 
 
@@ -69,7 +69,7 @@ def scan_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_union_dirs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-path scan: one reader over several files/dirs (same schema)."""
     p = table_path(sf_dir, "supplier")
-    return spark.read.parquet(p, p)
+    return spark.read.schema(parquet_schema(spark, p)).parquet(p, p)
 
 
 @query(
@@ -505,9 +505,8 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-combinable aggregate keyed on file name —
     perfect partial aggregation (each task sees one or few files).
     """
-    from luxor_db_spark.catalog import table_path
-
-    o = spark.read.parquet(table_path(sf_dir, "orders"))
+    path = table_path(sf_dir, "orders")
+    o = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     return (
         o.select(F.col("_metadata.file_name").alias("file_name"), "o_orderkey")
         .groupBy("file_name")

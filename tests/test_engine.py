@@ -1085,6 +1085,48 @@ def test_bench_noisy_gate_retries_and_republishes(monkeypatch, capsys):
     assert out["warm_biased"] is False
 
 
+def test_bench_reports_a_staging_failure(monkeypatch, capsys):
+    """A failed declared staging step is printed and published as
+    {"error": ...}, never as the {} of a run with no streaming keys."""
+    import json
+
+    import bench
+    from luxor_db_spark.streaming import streams
+
+    class _Warm:
+        def count(self):
+            return 0
+
+    def _boom(spark, sf_dir):
+        raise RuntimeError("disk full")
+
+    meta = {
+        "probe_baseline_s": 0.2,
+        "machine_factor": {},
+        "suite_machine_factor": 1.0,
+        "rerun_keys": [],
+        "contended_keys": [],
+        "n_probes": 1,
+    }
+    monkeypatch.setattr(bench, "get_spark", lambda **kw: object())
+    monkeypatch.setattr(
+        bench,
+        "load_all_queries",
+        lambda: {k: (lambda s, d: _Warm()) for k in bench.HEADLINE},
+    )
+    monkeypatch.setattr(
+        bench, "_run_suite", lambda s, q, keys: ({k: 1.0 for k in keys}, meta)
+    )
+    monkeypatch.setattr(bench, "_probe_once", lambda s: 0.2)
+    monkeypatch.setattr(bench, "_await_quiet", lambda budget: (0.3, "quiet"))
+    monkeypatch.setattr(streams, "stage_fixture_sources", _boom)
+    bench.main()
+    cap = capsys.readouterr()
+    out = json.loads(cap.out.strip().splitlines()[-1])
+    assert out["staging_setup_s"] == {"error": "RuntimeError: disk full"}
+    assert "RuntimeError: disk full" in cap.err
+
+
 def test_bench_interleaved_machine_factor_probes(monkeypatch):
     """r12 verdict task 1: the pre-suite gate cannot see contention
     arriving MID-run (BENCH_r12 passed the gate yet published 1.57×
@@ -1207,3 +1249,145 @@ def test_registry_order_import_history_invariant():
     ).stdout.splitlines()
     assert len(fresh) >= 266
     assert fresh == perturbed
+
+
+# --- Parquet schema memo (catalog.parquet_schema) ---------------------------
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs, counted under a private
+    job group through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"schema-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_load_table_starts_no_spark_job(spark, sf_dir):
+    from luxor_db_spark.catalog import load_table
+
+    load_table(spark, sf_dir, "lineitem")
+    assert _jobs_started(
+        spark, lambda: load_table(spark, sf_dir, "lineitem")
+    ) == 0
+
+
+def test_schema_memo_sees_a_rewritten_file(spark, tmp_path):
+    """A file rewritten at the same path is a new file version: its new
+    schema is inferred (one footer job), not served from the memo. The
+    same holds for a directory whose part file is rewritten."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from luxor_db_spark.catalog import parquet_schema
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert parquet_schema(spark, path).fieldNames() == ["a"]
+    assert _jobs_started(spark, lambda: parquet_schema(spark, path)) == 0
+
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    schema = []
+    assert _jobs_started(
+        spark, lambda: schema.append(parquet_schema(spark, path))
+    ) >= 1
+    assert schema[0].fieldNames() == ["a", "b"]
+    assert spark.read.schema(schema[0]).parquet(path).count() == 2
+
+    d = tmp_path / "dir.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"a": [1]}), str(d / "part-0.parquet"))
+    assert parquet_schema(spark, str(d)).fieldNames() == ["a"]
+    # In place: the directory's own entry list and mtime stay the same.
+    pq.write_table(pa.table({"a": [2], "c": [1.0]}), str(d / "part-0.parquet"))
+    assert parquet_schema(spark, str(d)).fieldNames() == ["a", "c"]
+
+
+def test_schema_memo_keys_on_binary_as_string(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import BinaryType, StringType
+
+    from luxor_db_spark.catalog import parquet_schema
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    conf = "spark.sql.parquet.binaryAsString"
+    prior = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false")
+        assert isinstance(parquet_schema(spark, path)["b"].dataType, BinaryType)
+        spark.conf.set(conf, "true")
+        assert isinstance(parquet_schema(spark, path)["b"].dataType, StringType)
+    finally:
+        spark.conf.set(conf, prior)
+
+
+def test_memoized_self_join_resolves_both_sides(spark, sf_dir, duck):
+    """Only the StructType is memoized: two loads of one table are two
+    relations with distinct attribute IDs, so a self-join keeps its
+    sides apart. Had the IDs been shared, ``a < b`` on the same column
+    would be always false and the join condition trivially true."""
+    from luxor_db_spark.catalog import load_table
+
+    a = load_table(spark, sf_dir, "lineitem")
+    b = load_table(spark, sf_dir, "lineitem")
+    n = (
+        a.join(b, a.l_orderkey == b.l_orderkey)
+        .filter(a.l_linenumber < b.l_linenumber)
+        .count()
+    )
+    (expected,) = duck.execute(
+        "SELECT count(*) FROM lineitem a JOIN lineitem b"
+        " ON a.l_orderkey = b.l_orderkey AND a.l_linenumber < b.l_linenumber"
+    ).fetchone()
+    assert expected > 0 and n == expected
+
+
+def test_schema_memo_threads_never_get_a_wrong_schema(
+    spark, tmp_path, monkeypatch
+):
+    """Threads share the memo. Under a tiny bound every thread keeps
+    evicting the others' entries, so lookups, inserts and evictions
+    interleave; each call must still return its own file's schema, and
+    the memo must stay within its bound."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from luxor_db_spark import catalog
+
+    paths = []
+    for i in range(5):
+        p = str(tmp_path / f"f{i}.parquet")
+        pq.write_table(pa.table({f"c{i}": [i]}), p)
+        paths.append(p)
+    monkeypatch.setattr(catalog, "_SCHEMA_MEMO_MAX", 3)
+
+    def worker(seed: int) -> int:
+        wrong = 0
+        for r in range(3):
+            for i in range(len(paths)):
+                j = (i + seed + r) % len(paths)
+                got = catalog.parquet_schema(spark, paths[j]).fieldNames()
+                wrong += got != [f"c{j}"]
+        return wrong
+
+    prior = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [pool.submit(worker, s) for s in range(8)]
+            wrong = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(prior)
+    assert wrong == [0] * 8
+    assert len(catalog._schema_memo) <= 3

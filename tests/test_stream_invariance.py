@@ -691,3 +691,21 @@ def test_drain_records_batch_and_state_stats(spark, sf_dir):
     assert stats["n_batches"] >= 1
     # complete-mode windowed agg: one state row per emitted window
     assert stats["state_rows_total"] == n
+
+
+@pytest.mark.parametrize(
+    "key", ["stream_dedup_survivors", "stream_chunk_dedup"]
+)
+def test_survivor_keys_warn_when_batch_hook_is_ignored(
+    spark, sf_dir, key, monkeypatch
+):
+    """The survivor keys replay the DEFAULT staged dir as one data batch
+    (its parts are hash-partitioned, not event-time-ordered), so a set
+    maxFilesPerTrigger hook is ignored there. That must be visible: a
+    test that sets the hook without hand-staging a dir would otherwise
+    exercise only the single-batch path while reading as multi-batch."""
+    monkeypatch.setenv(_ENV, "1")
+    with pytest.warns(RuntimeWarning, match=_ENV) as record:
+        rows = QUERIES[key](spark, sf_dir).collect()
+    assert rows
+    assert sum(_ENV in str(w.message) for w in record) == 1

@@ -4,10 +4,11 @@ task 7).
 
 266 keys are otherwise discoverable only by reading SURVEY.md §2/§2.12
 or the source; this emits one authoritative index — key, oracle kind,
-``file:line``, one-line semantics from the docstring — straight from
+``path::qualname``, one-line semantics from the docstring — straight from
 ``load_all_queries()``, so the survey, ledger and registry cannot drift
 without the accompanying test (tests/test_engine.py::
-test_operators_md_is_current) failing.
+test_operators_md_is_current) failing. Symbols, not line numbers, are
+cited so an edit that only shifts lines leaves the index unchanged.
 
 Usage:
     python tools/gen_operators.py          # rewrite docs/OPERATORS.md
@@ -58,9 +59,8 @@ def render() -> str:
     for key, fn in queries.items():
         try:
             src = os.path.relpath(inspect.getsourcefile(fn), REPO)
-            line_no = inspect.getsourcelines(fn)[1]
-            where = f"`{src}:{line_no}`"
-        except (OSError, TypeError):
+            where = f"`{src}::{fn.__qualname__}`"
+        except TypeError:  # no source file (built-in or C function)
             where = "?"
         kind = "SQL" if key in ORACLES else "rows"
         desc = _first_doc_line(fn).replace("|", "\\|")
